@@ -292,7 +292,7 @@ def run_suite(cores: int = CPUS, sf_dir: str = SF_DIR) -> dict:
         # moved, normalized value did not — this VM's identical work
         # has measured 1.3s-2.7s by hour)
         normalized = {k: round(v / probe_sec, 3) for k, v in timings.items()}
-        return {
+        result = {
             "metric": "headline suite wall time (pipeline e2e + operator queries)",
             "value": total,
             "unit": "sec",
@@ -306,11 +306,14 @@ def run_suite(cores: int = CPUS, sf_dir: str = SF_DIR) -> dict:
             "turns_per_sec_e2e_sf1": round(n_sf1 / e2e_sf1, 1),
             "parallelism": cores,
             "cpu_probe_sec": probe_sec,
-            "mem_probe_sec": _mem_probe(cores),
         }
     finally:
         spark.stop()
         shutil.rmtree(f"/dev/shm/spark_local_{os.getpid()}", ignore_errors=True)
+    # after spark.stop(): the probe's per-core arrays must not compete
+    # with a live driver JVM for memory
+    result["mem_probe_sec"] = _mem_probe(cores)
+    return result
 
 
 # ---------------------------------------------------------------------------

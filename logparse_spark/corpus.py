@@ -1346,12 +1346,18 @@ def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads (variant 'long' truncates 12.7 where TRY_CAST('12.7')
     NULLs) — the guard makes both engines NULL identically on
     anything but an integer literal. n counts rows passing the
-    guard.
+    guard. All three arms share the guard, followed by a try-cast so
+    an out-of-range integer NULLs too: a plain cast raises under
+    ANSI mode on "12.7" or "x", and DuckDB's TRY_CAST alone would
+    round "12.7" to 13.
 
     All arms are one scan + one partial+final aggregate."""
+    def int_or_null(s):
+        return F.when(s.rlike("^-?[0-9]+$"), s.try_cast("long"))
+
     ev = _events(spark, sf_dir)
     path = ev.withColumn(
-        "k", F.get_json_object("props", "$.k").cast("long")
+        "k", int_or_null(F.get_json_object("props", "$.k"))
     ).groupBy("event_type").agg(
         F.sum("k").alias("sum_k"), F.count("*").alias("n")
     ).select(F.lit("path").alias("part"),
@@ -1360,11 +1366,11 @@ def q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.from_json("props", "map<string,string>"))
         .alias("key", "val"))
     mp = kv.groupBy("key").agg(
-        F.sum(F.col("val").cast("long")).alias("sum_k"),
+        F.sum(int_or_null(F.col("val"))).alias("sum_k"),
         F.count(F.lit(1)).alias("n"),
     ).select(F.lit("map").alias("part"), "key", "sum_k", "n")
     ks = F.expr("try_variant_get(parse_json(props), '$.k', 'string')")
-    vk = F.when(ks.rlike("^-?[0-9]+$"), ks.cast("long"))
+    vk = int_or_null(ks)
     vr = (
         ev.select("event_type", vk.alias("k"))
         .groupBy("event_type")
@@ -1966,16 +1972,20 @@ def corpus_oracles() -> dict[str, str]:
         """,
         "events_json": """
             SELECT 'path' AS part, event_type AS key,
-                   CAST(sum(TRY_CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
+                   CAST(sum(CASE WHEN regexp_matches(k, '^-?[0-9]+$')
+                                 THEN TRY_CAST(k AS BIGINT) END) AS BIGINT) AS sum_k,
                    count(*) AS n
-            FROM events GROUP BY 2
+            FROM (SELECT event_type, json_extract_string(props, '$.k') AS k
+                  FROM events)
+            GROUP BY 2
             UNION ALL
             SELECT 'map' AS part, key,
-                   CAST(sum(TRY_CAST(json_extract_string(props, '$.' || key)
-                                     AS BIGINT)) AS BIGINT) AS sum_k,
+                   CAST(sum(CASE WHEN regexp_matches(v, '^-?[0-9]+$')
+                                 THEN TRY_CAST(v AS BIGINT) END) AS BIGINT) AS sum_k,
                    count(*) AS n
-            FROM (SELECT props, unnest(json_keys(props)) AS key
-                  FROM events)
+            FROM (SELECT key, json_extract_string(props, '$.' || key) AS v
+                  FROM (SELECT props, unnest(json_keys(props)) AS key
+                        FROM events))
             GROUP BY 2
             UNION ALL
             SELECT 'variant' AS part, event_type AS key,
@@ -1986,8 +1996,8 @@ def corpus_oracles() -> dict[str, str]:
                      CASE WHEN regexp_matches(
                               json_extract_string(props, '$.k'),
                               '^-?[0-9]+$')
-                          THEN CAST(json_extract_string(props, '$.k')
-                                    AS BIGINT) END AS vk
+                          THEN TRY_CAST(json_extract_string(props, '$.k')
+                                        AS BIGINT) END AS vk
               FROM events
             ) GROUP BY 2
         """,
@@ -2372,28 +2382,33 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame, n: int = 8,
     doc_grams = grams(docs)
     if mode == "bloom":
         spark = docs.sparkSession
-        # the gram set is re-used three times (count, mask build,
-        # verify join) — cache it so the benchmark side is derived
-        # once (it is small by definition, but not free)
+        # the count and the mask build both read the gram set — cache
+        # it for those two passes (small by definition, but not free)
         bench = bench.persist()
-        n_grams = bench.count()
-        m_bits = max(1024, _BLOOM_BITS_PER_GRAM * n_grams)
-        m_bits += (-m_bits) % 64
-        pos_exprs = _bloom_positions(m_bits)
-        # fold bit positions into 64-bit mask WORDS distributed-side
-        # (bit_or partial-aggregates map-side): the driver collects at
-        # most m_bits/64 longs — never k x n_grams position rows,
-        # which for a 100M-gram suite would out-weigh the very gram
-        # broadcast this mode exists to avoid
-        word_rows = (
-            bench.select(F.explode(F.array(*pos_exprs)).alias("p"))
-            .groupBy(F.shiftright("p", 6).cast("int").alias("w"))
-            .agg(F.bit_or(F.call_function(
-                "shiftleft", F.lit(1).cast("long"),
-                F.col("p").bitwiseAND(F.lit(63)).cast("int")))
-                .alias("bits"))
-            .collect()
-        )
+        try:
+            n_grams = bench.count()
+            m_bits = max(1024, _BLOOM_BITS_PER_GRAM * n_grams)
+            m_bits += (-m_bits) % 64
+            pos_exprs = _bloom_positions(m_bits)
+            # fold bit positions into 64-bit mask WORDS distributed-side
+            # (bit_or partial-aggregates map-side): the driver collects
+            # at most m_bits/64 longs — never k x n_grams position rows,
+            # which for a 100M-gram suite would out-weigh the very gram
+            # broadcast this mode exists to avoid
+            word_rows = (
+                bench.select(F.explode(F.array(*pos_exprs)).alias("p"))
+                .groupBy(F.shiftright("p", 6).cast("int").alias("w"))
+                .agg(F.bit_or(F.call_function(
+                    "shiftleft", F.lit(1).cast("long"),
+                    F.col("p").bitwiseAND(F.lit(63)).cast("int")))
+                    .alias("bits"))
+                .collect()
+            )
+        finally:
+            # the returned frame is lazy: a cache held past this call
+            # would outlive it, so the verify join re-derives the
+            # (benchmark-bounded) gram set instead
+            bench.unpersist()
         words = [0] * (m_bits // 64)
         for r in word_rows:
             words[int(r["w"])] = int(r["bits"])

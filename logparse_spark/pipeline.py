@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from . import stages
 from .rules import CompiledRules, load_rules
-from .sinks import SinkSet, committed_buckets, load_manifest
+from .sinks import SinkSet, committed_buckets, load_manifest, sink_totals
 
 
 @dataclass
@@ -305,11 +305,8 @@ def render_report(
     Totals come from the manifest lineage (no job at all)."""
     from pyspark.sql.window import Window
 
-    sink = SinkSet(out_dir=out_dir)
-    totals: dict[str, int] = {}
-    for r in sink.lineage_df(spark).collect():
-        totals[r["sink_id"]] = totals.get(r["sink_id"], 0) + int(r["rows"])
-    routed = sink.read_routed(spark)
+    totals = sink_totals(load_manifest(out_dir)["buckets"].values())
+    routed = SinkSet(out_dir=out_dir).read_routed(spark)
 
     count_rules = [r.spec.name for r in compiled.rules if r.spec.action == "count"]
     report_rules = [r.spec.name for r in compiled.rules if r.spec.action == "report"]

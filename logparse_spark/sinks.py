@@ -40,6 +40,7 @@ Lineage protocol (ONE pass over the data, ZERO read-back):
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import time
@@ -48,6 +49,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 MANIFEST_DIR = "_manifest"
 MANIFEST_FILE = "committed.json"
@@ -187,6 +189,46 @@ def committed_buckets(out_dir: str) -> set[int]:
     return {int(b) for b in load_manifest(out_dir)["buckets"]}
 
 
+def _bucket_ids(spark: SparkSession, conv_ids: list[str],
+                n_buckets: int) -> list[int]:
+    """Bucket id of each conversation, in input order, under the write
+    path's own JVM expression ``pmod(xxhash64(conv_id), B)`` —
+    xxhash64 has no Python twin, and a reimplementation could
+    silently diverge. The ids travel as ONE JSON array literal over a
+    one-row inline table, so the optimizer folds the whole projection
+    into a local relation on the driver: no Python worker, no shuffle,
+    and no Spark job."""
+    ids = F.from_json(F.lit(json.dumps(list(conv_ids))), "array<string>")
+    b = F.transform(ids, lambda c: F.pmod(F.xxhash64(c),
+                                          F.lit(int(n_buckets))).cast("int"))
+    return list(spark.sql("SELECT * FROM VALUES (1) AS t(x)")
+                .select(b).collect()[0][0])
+
+
+_PARTITION_COLUMNS = ("bucket", "sink_id")
+
+
+def _reader_schema(schema: StructType) -> StructType:
+    """A run's write-time schema as a reader of its files sees it: the
+    data columns in write order, then the partition columns, every
+    field nullable — what parquet schema inference would return,
+    recorded so reads never pay an inference job."""
+    fields = [f for f in schema.fields if f.name not in _PARTITION_COLUMNS] \
+        + [schema[c] for c in _PARTITION_COLUMNS]
+    return StructType([StructField(f.name, f.dataType, True, f.metadata)
+                       for f in fields])
+
+
+def sink_totals(entries) -> dict[str, int]:
+    """Per-sink row totals over lineage entries ({"rows", "sinks"}
+    dicts: the manifest's buckets or a write's lineage)."""
+    totals: dict[str, int] = {}
+    for e in entries:
+        for s, n in e["sinks"].items():
+            totals[s] = totals.get(s, 0) + int(n)
+    return totals
+
+
 def _aggregate_partition_rows(triples) -> dict[int, dict]:
     """Fold (bucket, sink_id, rows) triples — one per data file, from
     parquet footers or Iceberg manifest entries — into the lineage
@@ -225,6 +267,8 @@ class SinkSet:
     _written: bool = field(default=False, repr=False)
     # one-pass footer-scan memo (valid: one immutable run per SinkSet)
     _footer_cache: list | None = field(default=None, repr=False)
+    # reader-view schema of the run _write_run produced; commit records it
+    _schema: StructType | None = field(default=None, repr=False)
 
     def _run_dir(self) -> str:
         return os.path.join(self.out_dir, "runs", self.run_id)
@@ -282,10 +326,8 @@ class SinkSet:
         exact cardinality on demand from
         :meth:`compute_sink_cardinality` instead.
 
-        The sort key starts with the two dynamic-partition columns so
-        the file writer's required ordering is pre-satisfied (single
-        sequential open writer per task); (conv_id, turn_idx) after
-        them preserves routed-row equality order within each sink.
+        The files come out of :meth:`_write_run`, sorted by (bucket,
+        sink_id, conv_id, turn_idx) within each task.
         """
         from pyspark.sql import Observation
 
@@ -310,19 +352,7 @@ class SinkSet:
                     F.when(F.col("sink_id") == s, F.col("conv_id"))
                 ).alias(f"convs_{i}")
             )
-        out = (
-            df.select(*keep)
-            .observe(obs, *metrics)
-            .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx")
-        )
-        if self.fmt == "iceberg":
-            self._write_iceberg(out)
-        else:
-            (
-                out.write.mode("append")
-                .partitionBy("bucket", "sink_id")
-                .parquet(self._run_dir())
-            )
+        self._write_run(df.select(*keep).observe(obs, *metrics))
         got = obs.get  # blocks until the (already finished) action reports
         if self.fmt == "iceberg":
             lineage = self._lineage_from_iceberg_snapshot(df.sparkSession)
@@ -340,6 +370,30 @@ class SinkSet:
                 s: int(got[f"convs_{i}"]) for i, s in enumerate(observed_sinks)
             }
         return lineage
+
+    def _write_run(self, df: DataFrame, presorted: bool = False,
+                   max_records_per_file: int | None = None) -> None:
+        """The one writer of run files, shared by write_classified and
+        every rewrite (delete, merge, compact, rebucket): each task
+        sorted by the two dynamic-partition columns, so the file
+        writer's required ordering is pre-satisfied (a single
+        sequential open writer per task), then (conv_id, turn_idx) for
+        routed-row order within each sink — unless the caller's plan
+        is ``presorted`` in its own clustering (compaction's time and
+        z-order layouts). ``max_records_per_file`` rolls oversized
+        partitions. Keeps the reader-view schema for :meth:`commit`
+        to record, so reads of this run never infer it."""
+        if not presorted:
+            df = df.sortWithinPartitions(
+                *_PARTITION_COLUMNS, "conv_id", "turn_idx")
+        self._schema = _reader_schema(df.schema)
+        if self.fmt == "iceberg":
+            self._write_iceberg(df)
+            return
+        writer = df.write.mode("append")
+        if max_records_per_file is not None:
+            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        writer.partitionBy(*_PARTITION_COLUMNS).parquet(self._run_dir())
 
     def _lineage_from_iceberg_snapshot(self, spark: SparkSession) -> dict[int, dict]:
         """Per-(bucket, sink) row counts for the snapshot the write just
@@ -484,7 +538,9 @@ class SinkSet:
         used. Parquet may truncate long string stats, but always
         outward (min down, max up), so a recorded range is a superset
         of the true one and pruning on it can never drop a matching
-        file."""
+        file. The run's reader-view schema (from :meth:`_write_run`)
+        rides the same sidecar under the ``_schema`` key, which no
+        run-relative parquet path can collide with."""
         run_dir = self._run_dir()
         stats: dict[str, dict] = {}
         for r in self._scan_footers():
@@ -495,6 +551,8 @@ class SinkSet:
                 ent["ts_min"], ent["ts_max"] = r["ts_min"], r["ts_max"]
             if len(ent) > 1:
                 stats[r["rel"]] = ent
+        if self._schema is not None:
+            stats["_schema"] = self._schema.jsonValue()
         if stats:
             _atomic_write_json(
                 os.path.join(run_dir, "_filestats.json"), stats)
@@ -710,20 +768,27 @@ class SinkSet:
 
         ``file_sel`` narrows a run below directory granularity: for a
         run_id present in it, ONLY those run-relative parquet paths are
-        planned (the point-lookup path derives them from the
-        ``_filestats.json`` conv_id bounds — Iceberg's manifest
-        column-bounds pruning). An empty list means no file in the run
+        planned (:meth:`_plan_scan` derives them from the
+        ``_filestats.json`` bounds — Iceberg's manifest column-bounds
+        pruning). An empty list means no file in the run
         can match: the run is skipped outright."""
         by_run = by_run if by_run is not None else self._committed_by_run()
         file_sel = file_sel or {}
         frames = []
         for run_id, bs in sorted(by_run.items()):
             base = os.path.join(self.out_dir, "runs", run_id)
+            reader = spark.read.option("basePath", base)
+            # the schema recorded at commit spares the per-run parquet
+            # inference job; runs committed before it was recorded
+            # (or with no sidecar at all) still infer
+            schema = (self._file_stats(run_id) or {}).get("_schema")
+            if schema is not None:
+                reader = reader.schema(StructType.fromJson(schema))
             if run_id in file_sel:
                 rels = file_sel[run_id]
                 if not rels:
                     continue
-                df = spark.read.option("basePath", base).parquet(
+                df = reader.parquet(
                     *[os.path.join(base, r) for r in sorted(rels)])
                 frames.append(df.filter(F.col("bucket").isin(bs)))
                 continue
@@ -746,9 +811,9 @@ class SinkSet:
             if sel == avail:
                 # whole-run read: one root path plans faster than
                 # hundreds of explicit dirs
-                df = spark.read.option("basePath", base).parquet(base)
+                df = reader.parquet(base)
             else:
-                df = spark.read.option("basePath", base).parquet(
+                df = reader.parquet(
                     *[os.path.join(base, d) for d in sorted(sel)])
             frames.append(df.filter(F.col("bucket").isin(bs)))
         if not frames:
@@ -854,91 +919,117 @@ class SinkSet:
             )
         return self._read_committed(spark, by_run)
 
+    def _plan_scan(self, spark: SparkSession,
+                   conv_ids: list[str] | None = None,
+                   ts_range: tuple | None = None,
+                   as_of: int | None = None) -> tuple:
+        """The one read planner behind every lookup: the committed
+        runs, buckets and files a read of ``conv_ids`` (sorted,
+        distinct) and/or event-time range ``ts_range`` = (lo, hi)
+        (naive datetimes, hi exclusive) must plan, as of snapshot
+        ``as_of`` (the live table when None). Returns ``(by_run,
+        file_sel, buckets)`` for :meth:`_read_committed`; ``buckets``
+        are the ids' bucket ids, None when there are no ids or the
+        table predates the ``n_buckets`` pin.
+
+        Two pruning levels, both without a Spark job:
+          - bucket: the ids hash under the bucket count in effect AT
+            the snapshot (after a rebucket the live count addresses
+            only the live layout) via :func:`_bucket_ids`, and only
+            runs that committed those buckets are planned;
+          - file: the commit-time ``_filestats.json`` sidecar records
+            each file's conv_id and ts [min, max] (files are
+            (conv_id, turn_idx)-sorted, so rolled and compacted files
+            cover narrow ranges); a file is dropped only when its
+            bounds exclude every id or the whole range. Files without
+            bounds, and runs without a sidecar, stay planned.
+
+        When nothing can match, one run is still planned at directory
+        granularity so the read has a schema; the caller's predicates
+        prune it to zero files or row groups."""
+        committed = self._buckets_as_of(as_of) if as_of is not None \
+            else self._committed_by_run()
+        by_run, buckets = committed, None
+        if conv_ids is not None:
+            nb = self._n_buckets_as_of(as_of) if as_of is not None \
+                else load_manifest(self.out_dir).get("n_buckets")
+            if nb:
+                buckets = sorted(set(_bucket_ids(spark, conv_ids, int(nb))))
+                by_run = {r: sorted(set(bs).intersection(buckets))
+                          for r, bs in committed.items()
+                          if set(bs).intersection(buckets)}
+
+        def may_match(st: dict) -> bool:
+            if conv_ids is not None and "conv_min" in st:
+                i = bisect.bisect_left(conv_ids, st["conv_min"])
+                if i == len(conv_ids) or conv_ids[i] > st["conv_max"]:
+                    return False
+            if ts_range is not None and "ts_min" in st:
+                return (_parse_ts_bound(st["ts_max"]) >= ts_range[0]
+                        and _parse_ts_bound(st["ts_min"]) < ts_range[1])
+            return True
+
+        file_sel: dict[str, list[str]] = {}
+        for run_id, bs in by_run.items():
+            stats = self._file_stats(run_id)
+            if stats is None:
+                continue  # pre-stats run: dir-granularity read
+            base = os.path.join(self.out_dir, "runs", run_id)
+            rels = [os.path.relpath(os.path.join(root, f), base)
+                    for b in bs
+                    for root, _, files in os.walk(
+                        os.path.join(base, f"bucket={b}"))
+                    for f in files if f.endswith(".parquet")]
+            keep = [r for r in rels if r not in stats or may_match(stats[r])]
+            if len(keep) < len(rels):
+                file_sel[run_id] = keep
+        if not any(file_sel.get(r, True) for r in by_run):
+            return dict(list((by_run or committed).items())[:1]), {}, buckets
+        return by_run, file_sel, buckets
+
     def read_conversation(self, spark: SparkSession, conv_id: str,
                           as_of: int | None = None) -> DataFrame:
         """Point lookup of ONE conversation across all sinks — the
-        operational read a routed log store actually serves ("show me
-        everything conversation X produced") — touching 1/n_buckets of
-        the table instead of scanning it.
+        operational read a routed log store serves ("show me everything
+        conversation X produced"): :meth:`read_conversations` of one
+        id."""
+        return self.read_conversations(spark, [conv_id], as_of=as_of)
+
+    def read_conversations(self, spark: SparkSession, conv_ids: list[str],
+                           as_of: int | None = None) -> DataFrame:
+        """Batch point lookup: every routed row of the named
+        conversations, across all sinks — the GDPR-export / audit read
+        ("give me everything these users' conversations produced").
 
         The write path pins ``bucket = pmod(xxhash64(conv_id), B)``
-        with B recorded in the manifest (``n_buckets``), so the lookup
-        recomputes the bucket DRIVER-side with the same JVM expression
-        (a 1-row Spark job — xxhash64 has no Python twin and a
-        reimplementation could silently diverge) and reads only runs
-        that committed that bucket, with ``bucket = b`` pruning to the
-        matching partition directories. Within them the files are
-        (conv_id, turn_idx)-sorted, so the residual ``conv_id``
-        predicate prunes at parquet row-group granularity via
-        column stats. At 100 TB / 1024 buckets a lookup plans over
-        ~0.1% of the files and reads a few row groups.
-
-        Pre-``n_buckets`` manifests (or a bucket no run committed)
-        degrade gracefully: the bucket filter still partition-prunes
-        whatever layout exists; correctness never depends on the
-        manifest hint.
+        with B recorded in the manifest (``n_buckets``), so the ids
+        hash to at most len(ids) buckets. The lookup recomputes them
+        on the driver with the same JVM expression, applied to one
+        array literal of the ids and folded by the optimizer, so no
+        Spark job runs (xxhash64 has no Python twin, and a
+        reimplementation could silently diverge). :meth:`_plan_scan`
+        then plans only the runs holding those buckets, narrowed to
+        the files whose ``_filestats.json`` conv_id bounds can contain
+        an id, and the recorded run schemas spare every inference job.
+        Within the planned files rows are (conv_id, turn_idx)-sorted,
+        so the residual ``conv_id`` predicate prunes row groups via
+        column stats: at 1024 buckets an export of a handful of
+        conversations plans ~0.1% of the table's files. Pre-
+        ``n_buckets`` manifests degrade to a full plan, never a wrong
+        one.
 
         ``as_of`` time-travels the lookup to an earlier snapshot — the
         audit read ("what did conversation X look like before that
-        delete/merge?"), same semantics and expiry behavior as
-        :meth:`read_routed`."""
-        manifest = load_manifest(self.out_dir)
-        by_run = self._buckets_as_of(as_of) if as_of is not None \
-            else self._committed_by_run()
-        # hash under the bucket count in effect AT the snapshot being
-        # read: after a rebucket the live count addresses the live
-        # layout only, and a time-travel lookup under it would probe
-        # the wrong (pre-evolution) bucket id
-        nb = self._n_buckets_as_of(as_of) if as_of is not None \
-            else manifest.get("n_buckets")
-        cond = F.col("conv_id") == conv_id
-        file_sel: dict[str, list[str]] = {}
-        if nb:
-            b = int(
-                spark.range(1)
-                .select(F.pmod(F.xxhash64(F.lit(conv_id)),
-                               F.lit(int(nb))).cast("int"))
-                .first()[0]
-            )
-            hit_runs = {r: [b] for r, bs in by_run.items() if b in bs}
-            # no run committed this bucket: keep one run for schema; the
-            # bucket filter partition-prunes it to zero files at planning
-            by_run = hit_runs or dict(list(by_run.items())[:1])
-            cond = cond & (F.col("bucket") == b)
-            # second pruning level, below the bucket dir: the commit-time
-            # _filestats.json sidecar records each file's [min, max]
-            # conv_id bounds (files are (conv_id, turn_idx)-sorted, so
-            # rolled/compacted files cover narrow, disjoint ranges) —
-            # plan ONLY the files whose range can contain the key. Files
-            # absent from the sidecar (unknowable bounds) stay planned;
-            # runs with no sidecar (pre-stats commits) keep the
-            # dir-granularity read.
-            for run_id in hit_runs:
-                stats = self._file_stats(run_id)
-                if stats is None:
-                    continue
-                base = os.path.join(self.out_dir, "runs", run_id)
-                rels = []
-                for root, _, files in os.walk(
-                        os.path.join(base, f"bucket={b}")):
-                    rels.extend(
-                        os.path.relpath(os.path.join(root, f), base)
-                        for f in files if f.endswith(".parquet"))
-                keep = [
-                    r for r in rels
-                    if r not in stats
-                    or "conv_min" not in stats[r]
-                    or stats[r]["conv_min"] <= conv_id <= stats[r]["conv_max"]
-                ]
-                if len(keep) < len(rels):
-                    file_sel[run_id] = keep
-            if by_run and all(
-                    not file_sel.get(r, [True]) for r in by_run):
-                # every candidate file's bounds exclude the key: fall back
-                # to one dir-granularity run for schema; the bucket +
-                # conv_id predicates prune it at planning/row-group level
-                file_sel = {}
-                by_run = dict(list(by_run.items())[:1])
+        delete/merge?"), hashing under the bucket count in effect at
+        that snapshot, with :meth:`read_routed`'s expiry behavior."""
+        ids = sorted(dict.fromkeys(conv_ids))
+        if not ids:
+            raise ValueError("read_conversations needs at least one conv_id")
+        by_run, file_sel, buckets = self._plan_scan(
+            spark, conv_ids=ids, as_of=as_of)
+        cond = F.col("conv_id").isin(ids)
+        if buckets is not None:
+            cond = cond & F.col("bucket").isin(buckets)
         return self._read_committed(spark, by_run, file_sel=file_sel) \
             .filter(cond)
 
@@ -988,82 +1079,12 @@ class SinkSet:
                                "unexpected": sorted(unexpected)}
         return {"ok": not out, "runs": out}
 
-    def read_conversations(self, spark: SparkSession, conv_ids: list[str],
-                           as_of: int | None = None) -> DataFrame:
-        """Batch point lookup: every routed row of the named
-        conversations, across all sinks — the GDPR-export / audit read
-        ("give me everything these users' conversations produced").
-
-        Pruning mirrors :meth:`read_conversation`, generalized: the
-        ids hash to at most len(ids) buckets (one tiny Spark job, the
-        same JVM expression as the write path), only runs holding
-        those buckets are planned with a ``bucket IN`` partition
-        filter, and within them the ``_filestats.json`` conv bounds
-        drop files whose [min, max] range contains none of the ids —
-        at 1024 buckets an export of a handful of conversations plans
-        ~0.1% of the table's files. ``as_of`` time-travels (hashing
-        under the bucket count in effect at that snapshot)."""
-        ids = sorted(dict.fromkeys(conv_ids))
-        if not ids:
-            raise ValueError("read_conversations needs at least one conv_id")
-        manifest = load_manifest(self.out_dir)
-        by_run = self._buckets_as_of(as_of) if as_of is not None \
-            else self._committed_by_run()
-        nb = self._n_buckets_as_of(as_of) if as_of is not None \
-            else manifest.get("n_buckets")
-        cond = F.col("conv_id").isin(ids)
-        file_sel: dict[str, list[str]] = {}
-        if nb:
-            target = set(
-                r["b"] for r in
-                spark.createDataFrame([(c,) for c in ids], "conv_id string")
-                .select(F.pmod(F.xxhash64("conv_id"), F.lit(int(nb)))
-                        .cast("int").alias("b")).distinct().collect()
-            )
-            hit_runs = {
-                r: sorted(set(bs) & target)
-                for r, bs in by_run.items() if set(bs) & target
-            }
-            by_run = hit_runs or dict(list(by_run.items())[:1])
-            cond = cond & F.col("bucket").isin(sorted(target))
-            bucket_dirs = {f"bucket={b}" for b in target}
-            for run_id, bs in (hit_runs or {}).items():
-                stats = self._file_stats(run_id)
-                if stats is None:
-                    continue
-                base = os.path.join(self.out_dir, "runs", run_id)
-                rels = []
-                for root, _, files in os.walk(base):
-                    rel_root = os.path.relpath(root, base)
-                    if rel_root.split(os.sep)[0] not in bucket_dirs:
-                        continue
-                    rels.extend(
-                        os.path.relpath(os.path.join(root, f), base)
-                        for f in files if f.endswith(".parquet"))
-                keep = [
-                    r for r in rels
-                    if r not in stats
-                    or "conv_min" not in stats[r]
-                    or any(stats[r]["conv_min"] <= c <= stats[r]["conv_max"]
-                           for c in ids)
-                ]
-                if len(keep) < len(rels):
-                    file_sel[run_id] = keep
-            if by_run and all(not file_sel.get(r, [True]) for r in by_run):
-                # every candidate file's bounds exclude every id: keep
-                # one dir-granularity run for schema; the predicates
-                # prune it at planning/row-group level
-                file_sel = {}
-                by_run = dict(list(by_run.items())[:1])
-        return self._read_committed(spark, by_run, file_sel=file_sel) \
-            .filter(cond)
-
     def read_time_range(self, spark: SparkSession, lo, hi,
                         as_of: int | None = None) -> DataFrame:
         """Event-time range read ``lo <= ts < hi`` with FILE-level
-        skipping from the ``_filestats.json`` ts bounds — the Iceberg
-        scan-planning analogue of pruning data files on column
-        min/max before any task is scheduled.
+        skipping (:meth:`_plan_scan`) from the ``_filestats.json`` ts
+        bounds — the Iceberg scan-planning analogue of pruning data
+        files on column min/max before any task is scheduled.
 
         Where the skipping bites at 100 TB: file bounds are only as
         narrow as the layout's time clustering, exactly like Iceberg.
@@ -1088,33 +1109,8 @@ class SinkSet:
         lo_dt, hi_dt = _parse_ts_bound(lo), _parse_ts_bound(hi)
         if not lo_dt < hi_dt:
             raise ValueError(f"empty time range: {lo!r} .. {hi!r}")
-        by_run = self._buckets_as_of(as_of) if as_of is not None \
-            else self._committed_by_run()
-        file_sel: dict[str, list[str]] = {}
-        for run_id in by_run:
-            stats = self._file_stats(run_id)
-            if stats is None:
-                continue
-            base = os.path.join(self.out_dir, "runs", run_id)
-            rels = []
-            for root, _, files in os.walk(base):
-                rels.extend(
-                    os.path.relpath(os.path.join(root, f), base)
-                    for f in files if f.endswith(".parquet"))
-            keep = [
-                r for r in rels
-                if r not in stats
-                or "ts_min" not in stats[r]
-                or (_parse_ts_bound(stats[r]["ts_max"]) >= lo_dt
-                    and _parse_ts_bound(stats[r]["ts_min"]) < hi_dt)
-            ]
-            if len(keep) < len(rels):
-                file_sel[run_id] = keep
-        if by_run and all(not file_sel.get(r, [True]) for r in by_run):
-            # nothing can intersect: keep one dir-granularity run for
-            # schema; the ts predicate prunes it to zero row groups
-            file_sel = {}
-            by_run = dict(list(by_run.items())[:1])
+        by_run, file_sel, _ = self._plan_scan(
+            spark, ts_range=(lo_dt, hi_dt), as_of=as_of)
         df = self._read_committed(spark, by_run, file_sel=file_sel)
         ts_type = dict(df.dtypes)["ts"]
         lo_lit = F.lit(lo_dt.isoformat(sep=" ")).cast(ts_type)
@@ -1214,22 +1210,16 @@ class SinkSet:
 
     def _conv_buckets(self, spark: SparkSession,
                       conv_ids: list[str]) -> list[int] | None:
-        """Bucket id per conversation under the manifest-pinned bucket
-        space — the SAME JVM expression the write path uses (one tiny
-        Spark job over the literal ids; xxhash64 has no Python twin and
-        a reimplementation could silently diverge). None when the table
-        predates the ``n_buckets`` pin: no pruning is possible, row ops
-        degrade to a full-table rewrite (still correct)."""
+        """Distinct bucket ids of the conversations under the
+        manifest-pinned bucket space — :func:`_bucket_ids`, the write
+        path's own JVM expression folded on the driver (no Spark job;
+        xxhash64 has no Python twin). None when the table predates the
+        ``n_buckets`` pin: no pruning is possible, row ops degrade to a
+        full-table rewrite (still correct)."""
         nb = load_manifest(self.out_dir).get("n_buckets")
         if not nb:
             return None
-        rows = (
-            spark.createDataFrame([(c,) for c in conv_ids], "conv_id string")
-            .select(F.pmod(F.xxhash64("conv_id"), F.lit(int(nb)))
-                    .cast("int").alias("b"))
-            .distinct().collect()
-        )
-        return sorted(r["b"] for r in rows)
+        return sorted(set(_bucket_ids(spark, conv_ids, int(nb))))
 
     def delete_conversations(self, spark: SparkSession,
                              conv_ids: list[str]) -> dict:
@@ -1314,14 +1304,10 @@ class SinkSet:
         # doomed rows — same plan shape as compaction (one exchange on
         # the existing bucket column, writer ordering pre-satisfied)
         rewriter = SinkSet(out_dir=self.out_dir, fmt=self.fmt)
-        (
+        rewriter._write_run(
             self._read_committed(spark, hit_by_run)
             .filter(~cond)
-            .repartition(len(hit), "bucket")
-            .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx")
-            .write.mode("append").partitionBy("bucket", "sink_id")
-            .parquet(rewriter._run_dir())
-        )
+            .repartition(len(hit), "bucket"))
         # a rewrite that emptied every bucket writes no files at all;
         # the run dir must still exist for snapshot bookkeeping
         os.makedirs(rewriter._run_dir(), exist_ok=True)
@@ -1429,12 +1415,7 @@ class SinkSet:
                 out = out.unionByName(f_, allowMissingColumns=True)
 
             rewriter = SinkSet(out_dir=self.out_dir, fmt=self.fmt)
-            (
-                out.repartition(len(touched), "bucket")
-                .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx")
-                .write.mode("append").partitionBy("bucket", "sink_id")
-                .parquet(rewriter._run_dir())
-            )
+            rewriter._write_run(out.repartition(len(touched), "bucket"))
             new_lineage = rewriter._lineage_from_footers()
             for b in touched:
                 old_sinks = manifest["buckets"].get(
@@ -1751,11 +1732,9 @@ class SinkSet:
             by_run.setdefault(run_id, []).append(b)
         # one task per bucket -> one sorted file per (bucket, sink_id),
         # rolled every max_records_per_file rows when a target is set
-        writer = self._compaction_plan(
-            spark, by_run, sort_order=sort_order).write.mode("append")
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.partitionBy("bucket", "sink_id").parquet(compactor._run_dir())
+        compactor._write_run(
+            self._compaction_plan(spark, by_run, sort_order=sort_order),
+            presorted=True, max_records_per_file=max_records_per_file)
         new_lineage = compactor._lineage_from_footers()
         # conservation: the rewrite must carry every committed row
         for b in todo:
@@ -1833,30 +1812,19 @@ class SinkSet:
         by_run = self._committed_by_run()
         expected = {b: run for run, bs in by_run.items() for b in bs}
         rows_before = sum(int(m["rows"]) for m in manifest["buckets"].values())
-        sinks_before: dict[str, int] = {}
-        for m in manifest["buckets"].values():
-            for s, n in m["sinks"].items():
-                sinks_before[s] = sinks_before.get(s, 0) + int(n)
+        sinks_before = sink_totals(manifest["buckets"].values())
 
         rewriter = SinkSet(out_dir=self.out_dir, fmt=self.fmt)
-        out = (
+        rewriter._write_run(
             self._read_committed(spark, by_run)
             .withColumn("bucket", F.pmod(F.xxhash64("conv_id"),
                                          F.lit(int(new_buckets))).cast("int"))
-            .repartition(int(new_buckets), "bucket")
-            .sortWithinPartitions("bucket", "sink_id", "conv_id", "turn_idx")
-        )
-        writer = out.write.mode("append")
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.partitionBy("bucket", "sink_id").parquet(rewriter._run_dir())
+            .repartition(int(new_buckets), "bucket"),
+            max_records_per_file=max_records_per_file)
 
         new_lineage = rewriter._lineage_from_footers()
         rows_after = sum(e["rows"] for e in new_lineage.values())
-        sinks_after: dict[str, int] = {}
-        for e in new_lineage.values():
-            for s, n in e["sinks"].items():
-                sinks_after[s] = sinks_after.get(s, 0) + int(n)
+        sinks_after = sink_totals(new_lineage.values())
         if rows_after != rows_before or sinks_after != sinks_before:
             raise RuntimeError(
                 f"rebucket conservation violated: committed {rows_before} "

@@ -362,3 +362,53 @@ def test_decontaminate_bloom_fuzz(spark):
         assert exact == bloom
 
     prop()
+
+
+def test_events_json_non_integer_payloads_match_oracle(spark, tmp_path):
+    """Under Spark 4's ANSI mode a plain cast of a JSON value such as
+    "12.7" or "x" raises, while the DuckDB oracle NULLs it. Every arm
+    of events_json (path, map, variant) must NULL non-integer and
+    out-of-range values the same way in both engines."""
+    import json
+
+    payloads = [
+        ("a", {"k": 12}), ("a", {"k": "12.7"}), ("a", {"k": 12.7}),
+        ("b", {"k": "x"}), ("b", {"k": -3, "j": "7"}),
+        ("b", {"k": "99999999999999999999"}), ("c", {"j": 1.5}),
+    ]
+    path = f"{tmp_path}/events.parquet"
+    spark.createDataFrame(
+        [(i, t, json.dumps(p)) for i, (t, p) in enumerate(payloads)],
+        "event_id long, event_type string, props string",
+    ).coalesce(1).write.parquet(path)
+
+    got = sorted(map(tuple, corpus.q_events_json(spark, str(tmp_path))
+                     .collect()), key=str)
+    con = duckdb.connect()
+    con.execute("CREATE VIEW events AS SELECT * FROM "
+                f"read_parquet('{path}/*.parquet')")
+    want = sorted(con.execute(corpus.corpus_oracles()["events_json"])
+                  .fetchall(), key=str)
+    assert got == want
+    assert ("path", "a", 12, 3) in got
+    assert ("map", "k", 9, 6) in got
+    assert ("variant", "b", -3, 1) in got
+
+
+def test_decontaminate_bloom_releases_its_cache(spark):
+    """mode="bloom" caches the benchmark gram set for the mask build;
+    the returned frame is lazy, so the cache must be released before
+    the call returns, or it outlives every call in a long session."""
+    schema = "doc_id long, text string"
+    bench = spark.createDataFrame(
+        [(100, "alpha beta gamma delta epsilon zeta eta theta")], schema)
+    docs = spark.createDataFrame([
+        (1, "xx alpha beta gamma delta epsilon zeta eta theta yy"),
+        (2, "unrelated words entirely different content okay tail pad"),
+    ], schema)
+    cached = lambda: spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    before = cached()
+    out = corpus.decontaminate(docs, bench, n=8, mode="bloom")
+    assert cached() == before
+    assert {r["doc_id"]: r["n_shared"] for r in out.collect()} == {1: 1}
+    assert cached() == before

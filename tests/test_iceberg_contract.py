@@ -33,7 +33,8 @@ from logparse_spark.sinks import SinkSet, iceberg_available
 # function -> branch kinds expected there (the pinned census)
 PINNED_BRANCHES = {
     "_write_iceberg": {"guard"},        # jar-availability check raises
-    "write_classified": {"delegate"},   # write + lineage delegate
+    "write_classified": {"delegate"},   # lineage delegate
+    "_write_run": {"delegate"},         # write delegate (one run writer)
     "commit": {"skip"},                 # stats sidecar is parquet-only
     "delete_conversations": {"guard"},  # native DELETE FROM owns this
     "merge_classified": {"guard"},      # native MERGE INTO owns this
